@@ -97,38 +97,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_events_ts(df)
 
 
-def local_input_bytes(path: str) -> int | None:
-    """Total bytes of a driver-local input path — a single file's size,
-    or the recursive sum over a directory-layout table (a bare
-    ``getsize`` on a directory reports the ~4 KB dirent, which at
-    production scale would misclassify every multi-file table as
-    starved and insert a full-table round-robin shuffle).  ``None``
-    when the path is not measurable from the driver (object-store URI,
-    missing file): callers must treat unmeasurable as NOT starved so
-    the adaptive repartitions never fire on inputs they cannot see."""
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return None
-
-
 def scan_parallelism(sf_dir: str, name: str, spark: SparkSession) -> int:
     """Estimated task count of a ``load_table`` scan: Spark splits a
     parquet read at `spark.sql.files.maxPartitionBytes` granularity
     (bounded below by row-group layout, which this estimate cannot
     see — fine: production files are written multi-row-group, and the
     estimate is only used to detect *starvation*, not to size work).
-    Directory-layout tables are summed recursively; an unmeasurable
-    path (object store, missing) reports a huge count = never starved,
-    so the fan-out is a guaranteed no-op there."""
-    size = local_input_bytes(table_path(sf_dir, name))
+    Sized by ``materialize.input_bytes``; an unmeasurable path reports
+    a huge count = never starved, so the fan-out is a guaranteed no-op
+    there."""
+    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
+        input_bytes,
+    )
+
+    size = input_bytes(table_path(sf_dir, name))
     if size is None:
         return 1 << 30  # unmeasurable → assume wide, never fan out
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")

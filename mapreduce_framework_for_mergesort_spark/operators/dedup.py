@@ -250,7 +250,12 @@ def cluster_pairs(
       star's territory); on exhaustion, fall back to star contraction
       on the same edges instead of raising.  Long-diameter graphs get a
       guaranteed answer; typical dedup graphs never pay star's extra
-      per-round cost.
+      per-round cost.  Before any round, ONE bounded
+      ``edges.limit(DRIVER_UF_MAX_EDGES + 1).collect()`` routes: a
+      candidate graph within the ceiling is labelled by driver-side
+      union-find straight from those rows (``stats["algorithm"] ==
+      "driver_uf"``); a larger one has pulled ≤ DRIVER_UF_MAX_EDGES + 1
+      rows (a few MB) to the driver for nothing and goes distributed.
 
     Per round both algorithms materialize their state (lineage cut —
     iterative plans otherwise re-execute the whole prefix each round)
@@ -306,12 +311,13 @@ def cluster_pairs(
             # bounded driver collect, one union-find pass returns the
             # identical min-label fixpoint (pinned against hash-min /
             # star / the reference union-find in property tests).  The
-            # count probe runs over the already-checkpointed edge
-            # blocks, so the big-graph regime pays one cheap job to
-            # route past this.
-            n_edges = edges.count()
-            if n_edges <= DRIVER_UF_MAX_EDGES:
-                labels = _driver_uf_labels(edges, stats)
+            # routing probe IS that collect (see docstring).
+            rows = edges.limit(DRIVER_UF_MAX_EDGES + 1).collect()
+            if len(rows) <= DRIVER_UF_MAX_EDGES:
+                stats.update(algorithm="driver_uf", rounds=1)
+                labels = edges.sparkSession.createDataFrame(
+                    _union_find_labels(rows), "node bigint, cluster bigint"
+                )
         if labels is None:
             budget = min(max_iters, 8) if algorithm == "auto" else max_iters
             labels = _hashmin_labels(edges, budget, stats)
@@ -333,13 +339,11 @@ def cluster_pairs(
 DRIVER_UF_MAX_EDGES = 200_000
 
 
-def _driver_uf_labels(edges: DataFrame, stats: dict) -> DataFrame:
-    """Min-label connected components by driver-side union-find over a
-    bounded symmetric edge list — identical fixpoint to the
-    distributed algorithms (a component's label is its smallest node
-    id), one collect + one createDataFrame instead of per-round jobs."""
-    stats["algorithm"] = "driver_uf"
-    stats["rounds"] = 1
+def _union_find_labels(rows: list) -> list[tuple[int, int]]:
+    """(node, cluster) min-label components of a bounded, collected
+    symmetric (u, v) edge list by driver-side union-find — the identical
+    fixpoint to the distributed algorithms (a component's label is its
+    smallest node id) without their per-round jobs."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -350,20 +354,15 @@ def _driver_uf_labels(edges: DataFrame, stats: dict) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for u, v in edges.select("u", "v").toLocalIterator():
-        if u not in parent:
-            parent[u] = u
-        if v not in parent:
-            parent[v] = v
+    for u, v in rows:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
     # second pass: component min == the min-id root by construction
     # (unions always point the larger root at the smaller)
-    labels = [(n, find(n)) for n in parent]
-    return edges.sparkSession.createDataFrame(
-        labels, "node bigint, cluster bigint"
-    )
+    return [(n, find(n)) for n in parent]
 
 
 def _hashmin_labels(

@@ -23,10 +23,15 @@ Two mechanisms, chosen by session state:
   storage memory for the session lifetime).  Lost blocks fail the job
   instead of recomputing — acceptable on local[32] and for short-lived
   index builds, and the default when no checkpoint dir is set.
+
+The module also holds the engine's one input-size measurement,
+``input_bytes``, which every scale gate reads (README "Scale gates").
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 
@@ -47,38 +52,71 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def input_bytes(df: DataFrame) -> int | None:
-    """Total bytes of ``df``'s scan input files — the cheap observable
-    scale-adaptive materialization branches on (round 7).  Driver-side
-    METADATA only: ``inputFiles()`` lists the leaf scan's files and the
-    Hadoop FS status supplies each length; no data is read and nothing
-    executes.  Returns None when the plan has no file scan (in-memory
-    test DataFrames) or listing fails — callers must treat None as
-    "unknown", not zero."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    spark = df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+def input_bytes(source: DataFrame | str) -> int | None:
+    """Input bytes of ``source`` — the engine's one input-size
+    measurement, behind every scale gate.  ``source`` is a DataFrame
+    (the summed length of its ``inputFiles()``: the scan files of the
+    WHOLE plan, not the volume left after its filters or joins) or a
+    table path (a file's length, or the recursive sum over a
+    directory-layout table, skipping ``_``/``.``-prefixed files such as
+    ``_SUCCESS`` markers and ``.crc`` checksums).
+
+    Driver-side METADATA only: Hadoop FS lists the files and supplies
+    each length (object stores through their Hadoop connector); no data
+    is read.  Returns None only when nothing can be listed — no file
+    scan in the plan, a missing path, a scheme with no FileSystem, no
+    running SparkContext.  None means "unknown", never zero; each
+    caller takes its safe side on it: ``materialize_if_large`` and
+    ``input_at_least`` read not-large, ``io.scan_parallelism`` reads
+    never-starved, ``stream_state_partitions`` takes the 2×cores cap.
+    """
+    if isinstance(source, str):
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return None
+        paths = [source]
+    else:
+        sc = source.sparkSession.sparkContext
+        try:
+            paths = source.inputFiles()
+        except Exception:
+            return None
+        if not paths:
+            return None
+    jvm = sc._jvm
+    conf = sc._jsc.hadoopConfiguration()
     total = 0
     try:
-        for f in files:
+        for f in paths:
             p = jvm.org.apache.hadoop.fs.Path(f)
             fs = p.getFileSystem(conf)
-            total += fs.getFileStatus(p).getLen()
-    except Exception:
+            status = fs.getFileStatus(p)
+            if not status.isDirectory():
+                total += status.getLen()
+                continue
+            files = fs.listFiles(p, True)
+            while files.hasNext():
+                status = files.next()
+                if not status.getPath().getName().startswith(("_", ".")):
+                    total += status.getLen()
+    except Py4JJavaError:  # missing path, no FileSystem for the scheme
         return None
     return total
+
+
+def input_at_least(source: DataFrame | str, threshold_bytes: int) -> bool:
+    """Whether ``source`` measures at least ``threshold_bytes`` — the
+    one comparison of the byte gates (``materialize_if_large``,
+    ``bm25_topk(strategy="auto")``, the ``q_dedup_ngram_jaccard`` strip
+    rebuild).  An unknown size is never large: the small-input side."""
+    b = input_bytes(source)
+    return b is not None and b >= threshold_bytes
 
 
 def materialize_if_large(
     df: DataFrame, source: DataFrame, threshold_bytes: int
 ) -> DataFrame:
-    """Materialize ``df`` only when ``source``'s scan input exceeds
+    """Materialize ``df`` only when ``source``'s scan input reaches
     ``threshold_bytes`` (unknown sizes stay unmaterialized — the cheap
     default).  The scale-adaptive spelling of a measured trade that
     flips with volume: re-running a cheap codegen projection per
@@ -86,7 +124,6 @@ def materialize_if_large(
     and loses once the re-scans dominate (the round-6 minhash key paid
     +2 s at x100 for a fixed unmaterialized choice that bought 0.5 s
     at x1)."""
-    b = input_bytes(source)
-    if b is not None and b > threshold_bytes:
+    if input_at_least(source, threshold_bytes):
         return materialize(df)
     return df

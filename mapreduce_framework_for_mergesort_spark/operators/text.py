@@ -312,37 +312,6 @@ def doc_profile_arrow(text) -> Column:
     return pandas_udf(kernel, _DOC_PROFILE_SCHEMA)(text)
 
 
-def term_counts_arrow(text) -> Column:
-    """Per-document (term, tf) multiset as ONE Arrow kernel returning
-    ``array<struct<term,tf>>`` (round 13) — replaces tfidf's
-    explode-tokens → groupBy(content, term) count, which paid a corpus-
-    token-volume exchange; the Counter runs inside the row, so the only
-    remaining shuffles in tf-idf are the per_content distinct and the
-    df aggregation the algorithm fundamentally needs.  Exact: Counter
-    over the pinned ``hashing.tokenize`` == the SQL count-by-group."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from collections import Counter
-
-    def kernel(s):
-        out = []
-        for v in s:
-            if v is None:
-                out.append([])
-            else:
-                out.append(
-                    [
-                        {"term": t, "tf": c}
-                        for t, c in Counter(H.tokenize(v)).items()
-                    ]
-                )
-        return pd.Series(out)
-
-    kernel.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "array<struct<term string, tf long>>")(text)
-
-
 def doc_profile(documents: DataFrame, strategy: str = "arrow") -> DataFrame:
     """Per-document profile: token/subword/char counts, punctuation and
     stopword ratios, the heuristic quality score, and the regex scalar
@@ -644,22 +613,10 @@ def tfidf_top_terms(
     # per-doc window below are computed AFTER the join-back, so df
     # still counts DOCUMENTS, replicas included
     #
-    # strategy="codegen" (default — round-13 A/B LOSER was arrow:
-    # the per-content Counter kernel emits array<struct<term,tf>> in
-    # one crossing, removing the groupBy(content, term) exchange, but
-    # measured 1.27 vs 1.28 s at x1 and 1.82 vs 2.23 s at x10 — the
-    # Python-built struct arrays cost more to serialize than the
-    # map-side-combined count shuffle they replace.  "arrow" stays as
-    # the documented losing variant, pinned equal in
+    # strategy="codegen": the per-document spelling, kept as the
+    # reference the default "collapsed" is pinned row-identical to in
     # tests/test_llm_ops.py.
-    if strategy == "arrow":
-
-        def compute(reps: DataFrame) -> DataFrame:
-            return reps.select(
-                "__th", F.explode(term_counts_arrow(F.col("text"))).alias("kv")
-            ).select("__th", "kv.term", "kv.tf")
-
-    elif strategy == "codegen":
+    if strategy == "codegen":
 
         def compute(reps: DataFrame) -> DataFrame:
             return (
@@ -851,12 +808,12 @@ def bm25_topk(
     _check_bm25_terms(query_terms)
     if strategy == "auto":
         from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-            input_bytes,
+            input_at_least,
         )
 
         strategy = (
             "collapsed"
-            if (input_bytes(documents) or 0) >= BM25_COLLAPSE_THRESHOLD_BYTES
+            if input_at_least(documents, BM25_COLLAPSE_THRESHOLD_BYTES)
             else "per_doc"
         )
     # coalesce NULL text to '': Spark's legacy sizeOfNull makes

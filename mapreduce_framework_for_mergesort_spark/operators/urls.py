@@ -378,8 +378,9 @@ def pct_dot_normalize_arrow(path: Column) -> Column:
     unpickled closure — persists across that task's Arrow batches; the
     ``functions/hashing.py`` kernel family shape)
     instead of the codegen HOF fold.  Measured at ×1 and ×10 against
-    the codegen path in ``scripts/ab_hof_vs_arrow.py``; the DECISION
-    and both numbers live in SCALE_NOTES round 12 — this symbol stays
+    the codegen path in an interleaved A/B; the DECISION and both
+    numbers live in SCALE_NOTES ("Round 12: the pct/dot HOF A/B") —
+    this symbol stays
     as the documented losing/winning variant either way, pinned equal
     to the codegen fold in tests/test_urls.py."""
     import pandas as pd
@@ -428,8 +429,8 @@ def normalize_url(url: Column, pct_dot_strategy: str = "codegen") -> Column:
     """Canonical form per the module-docstring rules.
 
     ``pct_dot_strategy`` picks how the path's §6.2.2 pct/dot folds run
-    (round-12 A/B, ``scripts/ab_hof_vs_arrow.py``, numbers in
-    SCALE_NOTES): ``"codegen"`` (default) keeps the whole expression
+    (round-12 A/B, numbers in SCALE_NOTES "Round 12: the pct/dot HOF
+    A/B"): ``"codegen"`` (default) keeps the whole expression
     zero-Python — right for URL sets whose paths rarely carry escapes
     or dot segments, where the ``contains``/regex short-circuit makes
     the HOFs nearly free; ``"arrow"`` routes the two folds through the

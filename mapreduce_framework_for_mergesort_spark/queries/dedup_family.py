@@ -20,6 +20,7 @@ from mapreduce_framework_for_mergesort_spark.functions import vector as V
 from mapreduce_framework_for_mergesort_spark.io import load_table
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
 from mapreduce_framework_for_mergesort_spark.operators.materialize import (
+    input_at_least,
     materialize,
     materialize_if_large,
 )
@@ -468,13 +469,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("span_end").cast("double").alias("val"),
         F.col("n_dup_pos").cast("double").alias("val2"),
     )
-    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-        input_bytes,
-    )
-
     strip_strategy = (
         "arrow"
-        if (input_bytes(docs) or 0) >= STRIP_ARROW_THRESHOLD_BYTES
+        if input_at_least(docs, STRIP_ARROW_THRESHOLD_BYTES)
         else "codegen"
     )
     strips = (

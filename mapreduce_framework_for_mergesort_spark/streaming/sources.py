@@ -41,18 +41,19 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     clamp) 4 beats 6/8 (10.9 vs 15.0/19.3 s); past the need the cost
     explodes (interval join @×10: 17.7 s @32, 38.9 s @64 — 433 s of
     summed state-commit time on near-empty stores).  A 64 GB/day topic
-    still sizes to the 2×cores cap (parallelism-bound, the batch
-    advisor's regime, see ``tuning.shuffle_partitions``), where ≥2 MiB
+    still sizes to the 2×cores cap (parallelism-bound), where ≥2 MiB
     input/partition means stores are no longer fixed-cost bound.
     Parameterised, not local-tuned: follows data and cores, never a
     constant.
-    Directory-layout tables sum recursively; an unmeasurable path
-    (object store) falls back to 2×cores — at that scale the input is
-    never state-store-fixed-cost bound (``io.local_input_bytes``)."""
-    from mapreduce_framework_for_mergesort_spark.io import local_input_bytes
+    Sized by ``materialize.input_bytes``; an unmeasurable path falls
+    back to 2×cores — an input the driver cannot list is assumed
+    production-sized, never state-store-fixed-cost bound."""
+    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
+        input_bytes,
+    )
 
     cores = spark.sparkContext.defaultParallelism
-    size = local_input_bytes(table_path(sf_dir, "events"))
+    size = input_bytes(table_path(sf_dir, "events"))
     if size is None:
         return 2 * cores
     by_bytes = -(-size // (2 << 20))

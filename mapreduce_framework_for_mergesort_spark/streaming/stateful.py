@@ -140,15 +140,15 @@ def _to_cents_memo(v: float) -> int:
     return c
 
 
-def _fold_batch(rows: list, pdf: pd.DataFrame, hwm: int) -> int:
+def _fold_batch(rows: list, pdf: pd.DataFrame, hwm: int | None) -> int:
     """Append one micro-batch's (t, t, 1, cents) point sessions to
     ``rows`` and return the count of ordering-contract violations
-    (events at/below the emitted high-water mark) — the vectorized
-    spelling of the round-12 per-row loop (round 13: ``astype`` +
-    numpy comparison + memoized cents; ~4× less Python per event,
-    value-identical by the _to_cents purity)."""
+    (events at/below the emitted high-water mark ``hwm``; None = no
+    mark yet) — the vectorized spelling of the round-12 per-row loop
+    (round 13: ``astype`` + numpy comparison + memoized cents; ~4× less
+    Python per event, value-identical by the _to_cents purity)."""
     us = pdf["ts"].astype("int64").to_numpy() // 1000
-    violations = int((us <= hwm).sum()) if hwm else 0
+    violations = 0 if hwm is None else int((us <= hwm).sum())
     usl = us.tolist()
     from itertools import repeat
 
@@ -200,10 +200,11 @@ def sessionize_stream(
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         rows: list[tuple[int, int, int, int]] = []
-        hwm = 0
+        # None (NULL in state) = nothing emitted yet; 0 and negative
+        # (pre-epoch) marks are real marks
+        hwm = None
         if state.exists:
             starts, ends, counts, totals, hwm = state.get
-            hwm = hwm or 0
             rows += list(zip(starts, ends, counts, totals))
         violations = 0
         for pdf in pdfs:
@@ -213,7 +214,8 @@ def sessionize_stream(
         closed = [s for s in sessions if s[1] + gap_us < max_ts]
         kept = [s for s in sessions if s[1] + gap_us >= max_ts]
         if closed:
-            hwm = max(hwm, max(s[1] + gap_us for s in closed))
+            top = max(s[1] + gap_us for s in closed)
+            hwm = top if hwm is None else max(hwm, top)
         state.update(
             (
                 [s[0] for s in kept],
@@ -294,20 +296,18 @@ def sessionize_stream_watermarked(
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         rows: list[tuple[int, int, int, int]] = []
-        hwm = 0
         if state.exists:
-            starts, ends, counts, totals, hwm = state.get
-            hwm = hwm or 0
+            # the hwm slot stays NULL: emission here is watermark-gated,
+            # so there is no per-key ordering contract to police
+            starts, ends, counts, totals, _ = state.get
             rows += list(zip(starts, ends, counts, totals))
         if not state.hasTimedOut:
             for pdf in pdfs:
-                _fold_batch(rows, pdf, 0)
+                _fold_batch(rows, pdf, None)
         sessions = _merge_sessions(rows, gap_us)
         wm_us = state.getCurrentWatermarkMs() * 1000
         closed = [s for s in sessions if s[1] + gap_us < wm_us]
         kept = [s for s in sessions if s[1] + gap_us >= wm_us]
-        if closed:
-            hwm = max(hwm, max(s[1] + gap_us for s in closed))
         if kept:
             state.update(
                 (
@@ -315,7 +315,7 @@ def sessionize_stream_watermarked(
                     [s[1] for s in kept],
                     [s[2] for s in kept],
                     [s[3] for s in kept],
-                    hwm,
+                    None,
                 )
             )
             # Wake this key when the watermark can first close a session,

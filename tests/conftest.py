@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -45,9 +46,11 @@ def sf_oracle() -> str:
 # the all-50-keys vanilla-session smoke, the q_dedup_minhash_pairs
 # oracle-parity + dtype rows that complete the per-key coverage, one
 # fault-tolerance test, one cluster property test, and the
-# exactly-once ingest-retry test).  Keyed on file::test basenames so
-# the set survives rootdir differences; a renamed test silently moves
-# INTO the fast tier (fail-safe: more coverage, never less).
+# exactly-once ingest-retry test).  Keyed on the test file's path
+# relative to tests/ plus the test name, so the set survives rootdir
+# differences and a same-named test elsewhere is never skipped; a
+# renamed test silently moves INTO the fast tier (fail-safe: more
+# coverage, never less).
 SLOW_TESTS = frozenset({
     "test_bpe.py::test_bpe_shards_tokenizer_true_budgets",
     "test_bpe.py::test_train_bpe_textbook_merge_sequence",
@@ -124,13 +127,35 @@ SLOW_TESTS = frozenset({
 })
 
 
+TESTS_DIR = Path(__file__).resolve().parent
+_slow_skipped = 0
+
+
+def _slow_key(item) -> str | None:
+    """``<path relative to tests/>::<test>`` — None outside tests/."""
+    try:
+        rel = Path(item.path).resolve().relative_to(TESTS_DIR).as_posix()
+    except ValueError:
+        return None
+    return f"{rel}::{item.nodeid.split('::', 1)[-1]}"
+
+
 def pytest_collection_modifyitems(config, items):
+    global _slow_skipped
     if os.environ.get("MSFS_FULL_TESTS"):
         return
     skip = pytest.mark.skip(
         reason="slow tier (>=7s): set MSFS_FULL_TESTS=1 for the full run"
     )
     for item in items:
-        parts = item.nodeid.rsplit("/", 1)
-        if parts[-1] in SLOW_TESTS:
+        if _slow_key(item) in SLOW_TESTS:
             item.add_marker(skip)
+            _slow_skipped += 1
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    if _slow_skipped:
+        terminalreporter.write_line(
+            f"slow tier: {_slow_skipped} tests skipped; "
+            "set MSFS_FULL_TESTS=1 to run them"
+        )

@@ -199,17 +199,23 @@ def test_load_table_events_concurrent_loads_restore_conf(spark, sf_smoke):
             spark.conf.set(NANOS_KEY, prev)
 
 
-def test_local_input_bytes_directory_and_unmeasurable(tmp_path):
-    """Round-13 advisory fix: the adaptive sizing helpers must see a
-    directory-layout table's REAL bytes (a bare getsize reports the
-    ~4 KB dirent, which would misclassify every production multi-file
-    table as starved), and an unmeasurable path must read as None so
-    the fan-out never fires on inputs the driver cannot measure."""
-    from mapreduce_framework_for_mergesort_spark.io import local_input_bytes
+def test_input_bytes_directory_and_unmeasurable(spark, tmp_path):
+    """The one input-size measurement on table paths: the adaptive
+    sizing gates must see a directory-layout table's REAL bytes (a bare
+    file length reports the ~4 KB dirent, which would misclassify every
+    production multi-file table as starved), and an unmeasurable path
+    must read as None so the fan-out never fires on inputs the driver
+    cannot measure."""
+    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
+        input_bytes,
+    )
+    from mapreduce_framework_for_mergesort_spark.streaming.sources import (
+        stream_state_partitions,
+    )
 
     f = tmp_path / "one.parquet"
     f.write_bytes(b"x" * 1000)
-    assert local_input_bytes(str(f)) == 1000
+    assert input_bytes(str(f)) == 1000
 
     d = tmp_path / "table.parquet"
     d.mkdir()
@@ -217,10 +223,24 @@ def test_local_input_bytes_directory_and_unmeasurable(tmp_path):
     (d / "part-1.parquet").write_bytes(b"b" * 400)
     (d / "_SUCCESS").write_bytes(b"")  # marker files excluded
     (d / ".hidden").write_bytes(b"c" * 999)
-    assert local_input_bytes(str(d)) == 1000
+    assert input_bytes(str(d)) == 1000
 
-    assert local_input_bytes(str(tmp_path / "missing.parquet")) is None
-    assert local_input_bytes("s3://bucket/table") is None
+    assert input_bytes(str(tmp_path / "missing.parquet")) is None
+    assert input_bytes("s3://bucket/table") is None
+
+    # the streaming state sizing counts a multi-file table's summed
+    # bytes: 3 parts x 3 MiB = 9 MiB → 5 partitions at 2 MiB each
+    # (one part alone, or the dirent, would size to the 4-partition
+    # floor on a session with ≥ 3 cores)
+    ev = tmp_path / "sf" / "events.parquet"
+    (ev / "date=1").mkdir(parents=True)
+    for i in range(3):
+        (ev / "date=1" / f"part-{i}.parquet").write_bytes(b"e" * (3 << 20))
+    (ev / "_SUCCESS").write_bytes(b"")
+    assert input_bytes(str(ev)) == 9 << 20
+    cores = spark.sparkContext.defaultParallelism
+    want = max(min(cores, 4), min(5, 2 * cores))
+    assert stream_state_partitions(spark, str(tmp_path / "sf")) == want
 
 
 def test_scan_parallelism_unmeasurable_is_never_starved(spark, tmp_path):

@@ -4127,9 +4127,9 @@ def test_jpeg_decoder_progressive_color_420_with_restarts():
 
 
 # ---------------------------------------------------------------------------
-# round-13 strategy A/B: doc_profile / tfidf Arrow kernels vs codegen
-# (pinned equal — the hard gate behind the q_text_doc_profile /
-# q_tfidf_top_terms strategy switches)
+# round-13 strategy pins: the doc_profile Arrow kernel and the collapsed
+# tfidf vs their codegen references (pinned equal — the hard gate behind
+# the q_text_doc_profile / q_tfidf_top_terms strategy switches)
 # ---------------------------------------------------------------------------
 
 _TEXT_EDGE_BATTERY = [
@@ -4173,6 +4173,9 @@ def test_doc_profile_strategies_equal(spark, sf_oracle):
 
 
 def test_tfidf_strategies_equal(spark, sf_oracle):
+    """The production default ("collapsed") == the per-document
+    "codegen" reference on the NULL/CJK/punctuation edge battery and
+    the fixture documents."""
     from mapreduce_framework_for_mergesort_spark.operators import text as T
 
     for df in (
@@ -4181,7 +4184,7 @@ def test_tfidf_strategies_equal(spark, sf_oracle):
     ):
         a = sorted(
             tuple(r)
-            for r in T.tfidf_top_terms(df, strategy="arrow").collect()
+            for r in T.tfidf_top_terms(df, strategy="collapsed").collect()
         )
         c = sorted(
             tuple(r)

@@ -190,3 +190,17 @@ def test_driver_uf_matches_distributed_on_mixed_graph(spark):
     assert outs["auto"][1] == "driver_uf"
     assert outs["auto"][0] == outs["hash_min"][0] == outs["star"][0]
     assert len(outs["auto"][0]) == 60  # every node labeled, singletons too
+    # the bounded routing probe at its edge: a graph of exactly the
+    # ceiling's symmetric loop-free edges stays on the driver, one edge
+    # over goes distributed — same labels either way
+    n_sym = 2 * sum(1 for a, b in edges if a != b)
+    prev = D.DRIVER_UF_MAX_EDGES
+    try:
+        for ceiling, want in ((n_sym, "driver_uf"), (n_sym - 1, "hash_min")):
+            D.DRIVER_UF_MAX_EDGES = ceiling
+            st = {}
+            rows = D.cluster_pairs(pairs, nodes=nodes, stats=st).collect()
+            assert sorted(map(tuple, rows)) == outs["auto"][0]
+            assert st["algorithm"] == want
+    finally:
+        D.DRIVER_UF_MAX_EDGES = prev

@@ -205,6 +205,38 @@ def test_perkey_max_variant_counts_contract_violations(
     assert counter.value == 1
 
 
+def test_perkey_max_variant_counts_pre_epoch_violations(spark, tmp_path):
+    """The high-water mark is a real value, not "0 = unset": events
+    before 1970 close sessions whose ``end + gap`` is negative, and a
+    late event below that mark must still tick the accumulator (a 0
+    sentinel clamped the mark at 0 and silenced the count)."""
+    base = "1969-12-31 "
+    files = [
+        [base + "22:00:00", base + "22:10:00", base + "23:30:00"],
+        [base + "22:20:00"],  # below the 22:40 mark of the closed session
+    ]
+    for i, ts in enumerate(files):
+        p = tmp_path / f"f{i}.parquet"
+        pd.DataFrame(
+            {
+                "user_id": [1] * len(ts),
+                "ts": pd.to_datetime(ts).astype("datetime64[us]"),
+                "value": [1.0] * len(ts),
+            }
+        ).to_parquet(p)
+        os.utime(p, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
+    counter = spark.sparkContext.accumulator(0)
+    run_to_memory(
+        sessionize_stream(
+            _read_stream(spark, str(tmp_path)),
+            gap="30 minutes",
+            late_counter=counter,
+        ),
+        "t_sess_perkey_pre_epoch",
+    )
+    assert counter.value == 1
+
+
 def test_interval_join_hot_key_state_is_horizon_bounded(spark, tmp_path):
     """Round 6 (the sweep's one standing skew reading): a single HOT
     user funnelling every event through one interval-join state

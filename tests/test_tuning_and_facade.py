@@ -1,43 +1,13 @@
-"""Sizing advisor, engine facade stats, SQL view registration, and
-streaming checkpoint (exactly-once restart) semantics."""
+"""Engine facade stats, SQL view registration, and streaming
+checkpoint (exactly-once restart) semantics."""
 
 from __future__ import annotations
 
 import glob
 import shutil
 
-from mapreduce_framework_for_mergesort_spark import tuning
 from mapreduce_framework_for_mergesort_spark.engine import MergeSortEngine
 from mapreduce_framework_for_mergesort_spark.io import register_views, table_path
-
-
-def test_scan_split_sizing_scales():
-    # tiny input on the local profile: shrink splits to keep cores busy
-    small = tuning.scan_split_bytes(64 * tuning.MiB, tuning.LOCAL32)
-    assert 4 * tuning.MiB <= small < 128 * tuning.MiB
-    # 100 TB on a 1000x4 cluster: default 128 MiB splits are fine
-    big = tuning.scan_split_bytes(100 * 1024 * tuning.GiB, tuning.CLUSTER_1000X4)
-    assert big == 128 * tuning.MiB
-
-
-def test_shuffle_partition_sizing_scales():
-    p = tuning.CLUSTER_1000X4
-    n_small = tuning.shuffle_partitions(10 * tuning.GiB, p)
-    assert n_small == 8000  # 2x cores floor, rounded
-    # 100 TB shuffle: memory budget dominates, each partition must fit
-    n_big = tuning.shuffle_partitions(100 * 1024 * tuning.GiB, p)
-    budget = int(p.executor_mem_per_core * p.shuffle_mem_fraction)
-    assert n_big * budget >= 100 * 1024 * tuning.GiB
-    assert n_big >= n_small
-
-
-def test_advise_returns_conf_dict():
-    conf = tuning.advise(1 * tuning.GiB, tuning.LOCAL32)
-    assert set(conf) == {
-        "spark.sql.files.maxPartitionBytes",
-        "spark.sql.shuffle.partitions",
-    }
-    assert all(v.isdigit() for v in conf.values())
 
 
 def test_sort_file_with_stats(spark, tmp_path):

@@ -675,7 +675,8 @@ def test_pct_dot_python_replicas_match_codegen(spark):
 def test_normalize_url_strategies_equal(spark):
     """normalize_url(arrow) == normalize_url(codegen) on the messy
     battery — the hard gate behind the q_scalar_funcs strategy switch
-    (scripts/ab_hof_vs_arrow.py also checks 0 mismatches at sf0.1)."""
+    (the SCALE_NOTES "Round 12: the pct/dot HOF A/B" entry records 0
+    mismatches at sf0.1)."""
     urls = [
         "http://RFC.Ex.ORG/u3/%7ea/docs/./v2/../latest%2fx?x=%7e&b=%2F",
         "HTTPS://Host.COM:443/a/%2e%2e/c%4d?b=2&a=1",
